@@ -54,15 +54,18 @@ def memo_col(key: tuple, build: Callable[[], Column]) -> Column:
     This memoizes PLAN CONSTRUCTION only — no data, no results; every
     query execution still computes from its inputs. ``key`` must pin
     every input that shapes the tree (builder name, input column via
-    :func:`col_key`, every parameter). Entries are dropped when the
-    SparkContext changes (the Column wraps a JVM handle from the old
-    gateway)."""
+    :func:`col_key`, every parameter). A miss evicts every entry bound
+    to a SparkContext other than the active one (such a Column wraps a
+    JVM handle from the old gateway), so a process that restarts its
+    session does not keep the old trees alive."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     ent = _MEMO_COLS.get(key)
     if ent is not None and sc is not None and ent[0] is sc:
         return ent[1]
+    for k in [k for k, (owner, _) in _MEMO_COLS.items() if owner is not sc]:
+        del _MEMO_COLS[k]
     col = build()
     if sc is not None:
         _MEMO_COLS[key] = (sc, col)

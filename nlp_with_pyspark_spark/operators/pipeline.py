@@ -251,10 +251,15 @@ def curation_funnel(
     Scale shape: the scored frame ((doc_id, n_features, dsir_score) —
     three thin columns per survivor) is localCheckpoint-ed once and
     feeds the quantile probe, the survivor count and the keep count, so
-    the two DSIR corpus passes are paid exactly once; the quantile adds
-    one bounded-histogram aggregation; the three stage counts are
-    map-side 1-row aggs. Nothing corpus-sized is ever collected — the
-    driver sees one cutoff value and ≤``n_buckets`` histogram rows.
+    the two DSIR corpus passes are paid exactly once. The selection step
+    stays on the JVM: the weight table is one lazy plan collected once
+    (≤``n_buckets`` rows, selection.dsir_weights), and the cutoff is
+    read as rows (sketch.exact_quantile_rows) — below the small-input
+    threshold a bounds job plus one bounded value fetch rank-selected on
+    the driver, above it one bounded-histogram aggregation plus a
+    targeted-bucket sort. No frame is built from driver-side data, so
+    no Python worker starts. The three stage counts are map-side 1-row
+    aggs.
 
     ``materialize`` picks how the two multi-consumer seams are pinned:
     ``'local_checkpoint'`` (default — unchanged plans) or
@@ -262,7 +267,7 @@ def curation_funnel(
     see :func:`_pin`). Identical rows either way (tested).
     """
     from .selection import dsir_scores, features_expr
-    from .sketch import exact_quantiles
+    from .sketch import exact_quantile_rows
 
     flagged = corpus.select(
         "doc_id",
@@ -294,8 +299,7 @@ def curation_funnel(
         features_col="__feats",
     )
     scored = _pin(scored, materialize)
-    q = 1.0 - keep_frac
-    qrows = exact_quantiles(scored, "dsir_score", [q]).collect()
+    qrows = exact_quantile_rows(scored, "dsir_score", [1.0 - keep_frac])
     if qrows:
         kept = scored.where(F.col("dsir_score") >= float(qrows[0]["value"]))
     else:
@@ -356,9 +360,11 @@ def full_curation_funnel(
     frame is localCheckpoint-ed once and feeds the DSIR source-model
     pass, the scoring pass and the keep count, and the stage report is
     the flags explode (≤5 thin rows per doc into one hash agg) plus one
-    1-row agg for the selection stage. Nothing corpus-sized is
-    collected: the driver sees one quantile cutoff and ≤``n_buckets``
-    histogram rows.
+    1-row agg for the selection stage. The selection step is
+    :func:`curation_funnel`'s: one lazy weight-table plan collected
+    once, and the cutoff read as rows (sketch.exact_quantile_rows) — no
+    frame built from driver-side data between the survivor pin and the
+    stage report.
 
     ``materialize`` picks how the three multi-consumer seams (flags,
     survivors, scored) are pinned: ``'local_checkpoint'`` (default —
@@ -366,7 +372,7 @@ def full_curation_funnel(
     the 100 TB choice — see :func:`_pin`). Identical rows either way
     (tested)."""
     from .selection import dsir_scores, features_expr
-    from .sketch import exact_quantiles
+    from .sketch import exact_quantile_rows
 
     # checkpointed: the flags frame is consumed by TWO subtrees — the
     # hygiene stage counts and the survivor-id cut below — and an
@@ -404,7 +410,7 @@ def full_curation_funnel(
         ),
         materialize,
     )
-    qrows = exact_quantiles(scored, "dsir_score", [1.0 - keep_frac]).collect()
+    qrows = exact_quantile_rows(scored, "dsir_score", [1.0 - keep_frac])
     if qrows:
         kept = scored.where(F.col("dsir_score") >= float(qrows[0]["value"]))
     else:

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -167,17 +167,18 @@ def dsir_weights(
     explode materialized ints instead of re-deriving grams + md5 per
     pass (see :func:`features_expr`).
 
-    Execution shape: BOTH model fits run as ONE tagged union-aggregation
-    (per-bucket target count + combined count — the source count is
-    their exact long difference), the totals are exact integer sums of
-    the collected ≤B rows on the driver, and the log-ratio is evaluated
-    over those local rows through the same Spark expression (JVM
-    ``Math.log``) — so the weights are bit-identical to the former
-    two-fit + full-outer-join formulation (pinned in tests) while the
-    corpus-side work is a single pass and the per-call plan is one
-    simple aggregation instead of two aggregations, a full-outer join
-    and two broadcasts. The result is returned as a local-relation
-    DataFrame: ≤B rows that every caller collects or broadcasts anyway.
+    Execution shape: ONE lazy Spark plan. Both model fits run as one
+    tagged union-aggregation (per-bucket target count + combined count —
+    the source count is their exact long difference); the two model
+    totals are ``sum(...) over ()`` across the ≤B bucket rows (a
+    single-partition window, bounded by ``n_buckets``) and the
+    log-ratio is evaluated in the same projection (JVM
+    ``StrictMath.log`` on the same long totals), bit-identical to
+    summing the collected counts on the driver (differential test in
+    tests/test_selection.py). Nothing is collected here and no frame is
+    built from driver-side data: the caller's single collect
+    (:func:`dsir_scores`) or broadcast runs the whole chain on the JVM,
+    with no Python worker.
     """
     if features_col is not None:
         tb = target.select(F.explode(F.col(features_col)).alias("bucket"))
@@ -192,28 +193,22 @@ def dsir_weights(
     tagged = tb.withColumn("__t", F.lit(1)).unionByName(
         sb.withColumn("__t", F.lit(0))
     )
-    rows = (
-        tagged.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("__all"),
-            F.sum("__t").cast("long").alias("__tc"),
-        )
-        .collect()
+    counts = tagged.groupBy("bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("__all"),
+        F.sum("__t").cast("long").alias("__tc"),
     )
-    tt = sum(r["__tc"] for r in rows)
-    st = sum(r["__all"] - r["__tc"] for r in rows)
-    spark = corpus.sparkSession
-    local = spark.createDataFrame(
-        [(r["bucket"], r["__tc"], r["__all"] - r["__tc"]) for r in rows],
-        schema="bucket int, __tc long, __sc long",
-    )
+    tc = F.col("__tc")
+    sc = F.col("__all") - tc
+    # bounded single-partition window: ≤ n_buckets rows
+    everything = Window.partitionBy()
+    tt, st = F.sum(tc).over(everything), F.sum(sc).over(everything)
     a, b = F.lit(float(smoothing)), F.lit(float(smoothing * n_buckets))
     w = F.log(
-        (F.col("__tc").cast("double") + a) / (F.lit(tt).cast("double") + b)
+        (tc.cast("double") + a) / (tt.cast("double") + b)
     ) - F.log(
-        (F.col("__sc").cast("double") + a) / (F.lit(st).cast("double") + b)
+        (sc.cast("double") + a) / (st.cast("double") + b)
     )
-    return local.select("bucket", w.alias("w"))
+    return counts.select("bucket", w.alias("w"))
 
 
 def dsir_scores(

@@ -55,7 +55,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 
@@ -86,7 +86,8 @@ def exact_quantiles(
     Returns one row per (group, quantile): ``by... , q, value`` where
     ``value`` is the element at 1-indexed rank ``max(1, ceil(q*n))`` of
     the group's sorted non-null values — exactly DuckDB's
-    ``quantile_disc``. Nulls are excluded (both engines agree).
+    ``quantile_disc``. Nulls are excluded (both engines agree); a null
+    ``by`` key is a group of its own, as in SQL ``GROUP BY``.
 
     ``refine_threshold`` is the skew response the module docstring
     promises: a target bucket still holding more than this many rows
@@ -112,10 +113,82 @@ def exact_quantiles(
     as the histogram collect) and rank-selected on the driver — the
     histogram job and the windowed rank-select plan at that size are
     pure plan-compile + scheduling latency (measured: the sf0.1 funnel
-    quantile step fell ~1.7 s → ~0.4 s). Equality with the distributed
-    path is pinned in tests; pass ``driver_threshold=0`` to force the
-    distributed path.
+    quantile step fell ~1.7 s → ~0.4 s). The answer rows then exist
+    only on the driver, and this function wraps them in a local
+    relation; a caller that wants the rows themselves should call
+    :func:`exact_quantile_rows`, which returns them directly with no
+    driver-built frame and no further job. Equality with the
+    distributed path is pinned in tests; pass ``driver_threshold=0`` to
+    force the distributed path.
     """
+    result, out_schema = _select_quantiles(
+        df, value_col, quantiles, by, n_buckets, refine_threshold,
+        max_levels, driver_threshold,
+    )
+    if isinstance(result, DataFrame):
+        return result
+    return df.sparkSession.createDataFrame(result, schema=out_schema).orderBy(*by, "q")
+
+
+def exact_quantile_rows(
+    df: DataFrame,
+    value_col: str,
+    quantiles: Sequence[float],
+    by: Sequence[str] = (),
+    n_buckets: int = 2048,
+    refine_threshold: int | None = None,
+    max_levels: int = 4,
+    driver_threshold: int = _DRIVER_SELECT_MAX_ROWS,
+) -> list[Row]:
+    """:func:`exact_quantiles` as driver-side rows: the list
+    ``exact_quantiles(...).collect()`` returns (same rows, same
+    ``by..., q`` order, ``[]`` on empty input), for callers that need
+    the answer on the driver anyway — the funnels' keep cutoff. On the
+    small-input path the rank-selected rows are returned as they are,
+    so reading a cutoff costs the bounds job and the value fetch and
+    nothing else: no local relation is built, which in PySpark means
+    no Python worker. On the distributed path the frame is collected
+    (≤ #groups × #quantiles rows)."""
+    result, _ = _select_quantiles(
+        df, value_col, quantiles, by, n_buckets, refine_threshold,
+        max_levels, driver_threshold,
+    )
+    return result.collect() if isinstance(result, DataFrame) else result
+
+
+def _ascending_key(x) -> tuple:
+    """Sort key mirroring Spark's ascending order: nulls first, NaN
+    greater than every other double."""
+    return (x is not None, x != x, x)
+
+
+def _key_join(
+    left: DataFrame, right: DataFrame, keys: Sequence[str], how: str = "inner"
+) -> DataFrame:
+    """Equi-join on ``keys`` with null keys matching each other — a
+    null group is a group (``GROUP BY`` semantics, and the small-input
+    path's) — keeping one copy of each key column."""
+    rk = {k: f"__rk_{k}" for k in keys}
+    right = right.select(*[F.col(c).alias(rk.get(c, c)) for c in right.columns])
+    cond = [F.col(k).eqNullSafe(F.col(rk[k])) for k in keys]
+    return left.join(right, cond, how).drop(*rk.values())
+
+
+def _select_quantiles(
+    df: DataFrame,
+    value_col: str,
+    quantiles: Sequence[float],
+    by: Sequence[str],
+    n_buckets: int,
+    refine_threshold: int | None,
+    max_levels: int,
+    driver_threshold: int,
+) -> tuple[list[Row] | DataFrame, str]:
+    """The one rank-select behind :func:`exact_quantiles` and
+    :func:`exact_quantile_rows`: ``(result, out_schema)`` where
+    ``result`` is the sorted answer rows when they were computed on the
+    driver (small-input path, or empty input) and the lazy answer
+    frame on the distributed path."""
     if not quantiles:
         raise ValueError("quantiles must be non-empty")
     for q in quantiles:
@@ -148,7 +221,7 @@ def exact_quantiles(
     )
     bound_rows = [r for r in bounds.collect() if r["__n"] > 0]
     if not bound_rows:
-        return spark.createDataFrame([], out_schema)
+        return [], out_schema
 
     if sum(r["__n"] for r in bound_rows) <= driver_threshold:
         # measured-small input: one bounded fetch, driver rank-select
@@ -157,13 +230,17 @@ def exact_quantiles(
         groups: dict[tuple, list] = {}
         for r in data.collect():
             groups.setdefault(tuple(r[c] for c in by), []).append(r[value_col])
+        answer = Row(*by, "q", "value")
         out_rows = []
         for key, vals in groups.items():
-            vals.sort(key=lambda x: (x != x, x))
+            vals.sort(key=_ascending_key)
             n = len(vals)
             for q in quantiles:
-                out_rows.append((*key, float(q), vals[max(1, math.ceil(q * n)) - 1]))
-        return spark.createDataFrame(out_rows, schema=out_schema).orderBy(*by, "q")
+                out_rows.append(
+                    answer(*key, float(q), vals[max(1, math.ceil(q * n)) - 1])
+                )
+        out_rows.sort(key=lambda r: tuple(map(_ascending_key, r[:-1])))
+        return out_rows, out_schema
 
     # Level state. cand: rows of the still-active buckets, carrying the
     # bucket path columns __b0..__b{L}. pending: driver-side targets
@@ -204,7 +281,7 @@ def exact_quantiles(
         )
         bdf = F.broadcast(spark.createDataFrame(brows, schema=bschema))
         join_cols = [*by, *path_cols]
-        joined = cand.join(bdf, join_cols) if join_cols else cand.crossJoin(bdf)
+        joined = _key_join(cand, bdf, join_cols) if join_cols else cand.crossJoin(bdf)
         cand = joined.withColumn(bcol, _bucket_expr("__lo", "__hi")).drop(
             "__lo", "__hi"
         )
@@ -259,7 +336,9 @@ def exact_quantiles(
                     ),
                 )
             )
-            cand = cand.join(rdf, [*by, *[f"__b{i}" for i in range(level + 1)]], "left_semi")
+            cand = _key_join(
+                cand, rdf, [*by, *[f"__b{i}" for i in range(level + 1)]], "left_semi"
+            )
         level += 1
 
     # rank-select the finalized targets, one tiny window job per level
@@ -275,13 +354,13 @@ def exact_quantiles(
                 ),
             )
         )
-        needed = levels[lvl].join(
-            tdf.select(*by, *pcols).distinct(), [*by, *pcols], "left_semi"
+        needed = _key_join(
+            levels[lvl], tdf.select(*by, *pcols).distinct(), [*by, *pcols], "left_semi"
         )
         rn = F.row_number().over(Window.partitionBy(*by, *pcols).orderBy(v.asc()))
+        ranked = needed.withColumn("__rn", rn)
         parts.append(
-            needed.withColumn("__rn", rn)
-            .join(tdf, [*by, *pcols])
+            _key_join(ranked, tdf, [*by, *pcols])
             .where(F.col("__rn") == F.col("__k"))
             .select(*by, "q", v.alias("value"))
         )
@@ -290,7 +369,7 @@ def exact_quantiles(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy(*by, "q")
+    return out.orderBy(*by, "q"), out_schema
 
 
 def distinct_sketches(

@@ -1247,10 +1247,14 @@ def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc quality features (C4/Gopher-style cheap filters)."""
+    """Per-doc quality features (C4/Gopher-style cheap filters). The
+    scan is parallelism-guarded like ``_tokenized_documents``: the
+    regex projection would otherwise run on one task over a
+    single-row-group input."""
     from .operators.textstats import quality_features
+    from .sources.io import ensure_parallelism
 
-    return quality_features(read_table(spark, sf_dir, "documents"))
+    return quality_features(ensure_parallelism(read_table(spark, sf_dir, "documents")))
 
 
 from .operators.quality_model import QUALITY_LR_WEIGHTS as _QLW  # noqa: E402
@@ -4502,14 +4506,15 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, no global sort), keep ``dsir_score >= cutoff``. Composes
     three independently-checked operators (quality_score_expr /
     dsir_scores / exact_quantiles) into the published curation chain;
-    corpus_pipeline_funnel covers the HYGIENE half. Bench floor at
-    sf0.1 is ~7-9 s: two tokenize passes (survivor checkpoint build +
-    target model — the regex pipeline dominates per-pass cost) plus
-    the quantile's driver action; both passes scale with the scan
-    (100× probe: ~9×, SCALING.md) and the tokenize would be a
-    stored column, not a recompute, in a real pipeline — here the
-    query checkpoints (doc_id, lang, text, tokens) once and every
-    stage consumes the materialization."""
+    corpus_pipeline_funnel covers the HYGIENE half. Bench floor: two
+    tokenize passes (survivor checkpoint build + target model — the
+    regex pipeline dominates per-pass cost) plus the cutoff read (the
+    quantile bounds job and one bounded value fetch); the weight table
+    and the cutoff stay on the JVM, so no Python worker starts. Both
+    passes scale with the scan (100× probe: ~9×, SCALING.md) and the
+    tokenize would be a stored column, not a recompute, in a real
+    pipeline — here the query checkpoints (doc_id, lang, text, tokens)
+    once and every stage consumes the materialization."""
     from .operators.pipeline import curation_funnel
 
     docs = (

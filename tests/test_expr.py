@@ -128,3 +128,18 @@ def test_dense_weight_lit_nonfinite_round_trip(spark):
         assert (math.isnan(g) and math.isnan(w)) or g == w
         if g == 0.0:
             assert math.copysign(1.0, g) == math.copysign(1.0, w)
+
+
+def test_memo_col_miss_evicts_other_contexts_entries(spark):
+    """A memo miss drops every entry bound to a SparkContext other than
+    the active one: such a Column wraps a handle from a dead gateway and
+    must not outlive its session."""
+    from nlp_with_pyspark_spark.functions.expr import _MEMO_COLS, memo_col
+
+    sentinel_ctx = object()
+    _MEMO_COLS[("test.stale", "x")] = (sentinel_ctx, F.lit(0))
+    miss_key = ("test.evict_on_miss", id(sentinel_ctx))
+    memo_col(miss_key, lambda: F.lit(1))
+    assert ("test.stale", "x") not in _MEMO_COLS
+    assert miss_key in _MEMO_COLS
+    assert all(owner is spark.sparkContext for owner, _ in _MEMO_COLS.values())

@@ -298,3 +298,117 @@ def test_funnel_staging_materialization_matches_default(spark):
 
     with _pytest.raises(ValueError, match="materialize"):
         curation_funnel(docs, target, materialize="nope")
+
+
+def _dsir_weights_collect_formulation(
+    corpus, target, n_buckets=4096, smoothing=1.0, features_col=None
+):
+    """Reference: the former dsir_weights shape — collect the tagged
+    per-bucket counts, sum the totals on the driver, rebuild the rows as
+    a local relation and evaluate the log-ratio there."""
+    from nlp_with_pyspark_spark.operators.selection import _bucket, _gram_rows
+
+    def buckets(df):
+        if features_col is not None:
+            return df.select(F.explode(F.col(features_col)).alias("bucket"))
+        return _gram_rows(df, "tokens", "doc_id", (1, 2)).select(
+            _bucket(F.col("gram"), n_buckets).alias("bucket")
+        )
+
+    tagged = buckets(target).withColumn("__t", F.lit(1)).unionByName(
+        buckets(corpus).withColumn("__t", F.lit(0))
+    )
+    rows = (
+        tagged.groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("__all"),
+            F.sum("__t").cast("long").alias("__tc"),
+        )
+        .collect()
+    )
+    tt = sum(r["__tc"] for r in rows)
+    st = sum(r["__all"] - r["__tc"] for r in rows)
+    local = corpus.sparkSession.createDataFrame(
+        [(r["bucket"], r["__tc"], r["__all"] - r["__tc"]) for r in rows],
+        schema="bucket int, __tc long, __sc long",
+    )
+    a, b = F.lit(float(smoothing)), F.lit(float(smoothing * n_buckets))
+    w = F.log(
+        (F.col("__tc").cast("double") + a) / (F.lit(tt).cast("double") + b)
+    ) - F.log(
+        (F.col("__sc").cast("double") + a) / (F.lit(st).cast("double") + b)
+    )
+    return local.select("bucket", w.alias("w"))
+
+
+@pytest.mark.parametrize("smoothing", [1.0, 0.0])
+def test_dsir_weights_plan_equals_collect_formulation(spark, smoothing):
+    """dsir_weights as one lazy plan (totals as sum over () on the JVM)
+    must give bit-identical weights to the collect → local relation →
+    collect formulation it replaced, per bucket, with and without the
+    precomputed feature array. smoothing=0 leaves every bucket seen by
+    only one model without a finite weight (Spark's ln of 0 is NULL), so
+    the comparison covers the null buckets too."""
+    from nlp_with_pyspark_spark.operators.selection import features_expr
+
+    corpus = _docs(
+        spark,
+        [
+            (1, ["the", "cat", "sat", "on", "the", "mat"]),
+            (2, ["dogs", "bark", "at", "cats"]),
+            (3, ["quantum", "flux", "capacitor"]),
+            (4, []),
+        ],
+    )
+    target = _docs(spark, [(10, ["the", "cat", "saw", "dogs"]), (11, ["zebra"])])
+    def feat(df):
+        return df.select("doc_id", features_expr().alias("f"))
+
+    cases = [
+        ((corpus, target), {}),
+        ((feat(corpus), feat(target)), {"features_col": "f"}),
+    ]
+    for (c, t), kw in cases:
+        got = {
+            r.bucket: r.w for r in dsir_weights(c, t, smoothing=smoothing, **kw).collect()
+        }
+        want = {
+            r.bucket: r.w
+            for r in _dsir_weights_collect_formulation(
+                c, t, smoothing=smoothing, **kw
+            ).collect()
+        }
+        assert got == want
+        assert len(got) > 10
+        finite = [w for w in got.values() if w is not None and abs(w) != float("inf")]
+        assert (len(finite) < len(got)) == (smoothing == 0.0)
+
+
+def test_curation_funnel_builds_no_driver_frames(spark, monkeypatch):
+    """The selection step runs on the JVM: curation_funnel builds no
+    frame from driver-side Python data (each such frame is a PySpark
+    local relation, and the weight table and cutoff used to round-trip
+    through two of them)."""
+    from pyspark.sql import SparkSession
+
+    from nlp_with_pyspark_spark.operators.pipeline import curation_funnel
+
+    good = "the quick brown fox jumps over the lazy dog and runs far away today"
+    rows = [(i, good + f" extra{i}") for i in range(12)]
+    rows += [(i, "@@@@ #### %%%% &&&& !!!! ???? ++++ ==== ~~~~ ;;;;") for i in range(12, 18)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "tokens", F.split(F.lower(F.col("text")), r"\s+")
+    )
+    target = docs.where((F.col("doc_id") % 2 == 0) & (F.col("doc_id") < 12))
+
+    calls = []
+    real = SparkSession.createDataFrame
+
+    def counting(self, *args, **kwargs):
+        calls.append(args[:1])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", counting)
+    got = {r.stage: r.n_docs for r in curation_funnel(docs, target).collect()}
+    assert calls == []
+    assert 0 < got["dsir_selected"] <= got["quality"] < got["raw"] == 18

@@ -18,7 +18,11 @@ from pyspark.sql import functions as F
 
 from nlp_with_pyspark_spark.functions.text import tokens_pipeline
 from nlp_with_pyspark_spark.operators.search import bm25_topk
-from nlp_with_pyspark_spark.operators.sketch import exact_quantiles, heavy_hitters
+from nlp_with_pyspark_spark.operators.sketch import (
+    exact_quantile_rows,
+    exact_quantiles,
+    heavy_hitters,
+)
 from nlp_with_pyspark_spark.plans.inspect import final_plan_string, plan_string
 
 
@@ -823,6 +827,33 @@ def test_exact_quantiles_driver_path_equals_distributed(spark, values_df):
             values_df, "v", QS, by=by, n_buckets=8, driver_threshold=0
         ).collect()
         assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
+
+
+def test_exact_quantile_rows_equals_collected_frame(spark, values_df):
+    """exact_quantile_rows (the funnels' cutoff read) must return
+    exactly ``exact_quantiles(...).collect()`` — same rows, same order —
+    on the driver path and the distributed path, global and grouped
+    (including a null group key and double values), at the q=0 and q=1
+    edges (both in QS), and ``[]`` on empty input. The two paths agree
+    with each other too — a null group key included."""
+    nullable = values_df.select(
+        F.when(F.col("grp") > 0, F.col("grp")).alias("grp"),
+        (F.col("v") / 3).alias("v"),
+    )
+    for df in (values_df, nullable):
+        for by in ((), ["grp"]):
+            per_path = []
+            for path in ({}, {"driver_threshold": 0}):
+                want = exact_quantiles(df, "v", QS, by=by, n_buckets=8, **path).collect()
+                got = exact_quantile_rows(df, "v", QS, by=by, n_buckets=8, **path)
+                assert got == want
+                assert [r.asDict() for r in got] == [r.asDict() for r in want]
+                per_path.append(got)
+            assert per_path[0] == per_path[1]
+    empty = values_df.where(F.lit(False))
+    for path in ({}, {"driver_threshold": 0}):
+        assert exact_quantile_rows(empty, "v", [0.5], by=["grp"], **path) == []
+        assert exact_quantiles(empty, "v", [0.5], by=["grp"], **path).collect() == []
 
 
 def test_posting_index_delete_fallback_over_threshold(
