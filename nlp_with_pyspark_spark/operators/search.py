@@ -38,10 +38,11 @@ never drift, and indexed results are BIT-IDENTICAL to the direct path
 (same integer tf/dl/df/N inputs, same float association order —
 equality pinned in tests/test_sketch_search.py).
 
-Index maintenance follows the LSM delete pattern: ``remove_from_
-posting_index`` tombstones ids (query-time excludes them via a
-broadcast anti-join on the candidate-sized frame, stats re-derive over
-the live ledger — bit-identical to a rebuild without those docs), and
+Index maintenance is the engine's one tombstoned-store lifecycle
+(sources/store.py): ``remove_from_posting_index`` tombstones ids
+(query-time excludes them via a broadcast anti-join on the
+candidate-sized frame, stats re-derive over the live ledger —
+bit-identical to a rebuild without those docs), and
 ``vacuum_posting_index`` periodically folds the tombstones into a
 spec-preserving physical rewrite so the tombstone list stays
 broadcast-small and scan cost tracks live data.
@@ -350,62 +351,19 @@ def persist_posting_index(
     )
 
 
-def _table_path_if_external(spark: SparkSession, table: str) -> str | None:
-    """Data path of ``table`` when it is EXTERNAL, else None. The
-    maintenance overwrites below must carry this path through
-    ``option('path', ...)``: a bare ``mode('overwrite').saveAsTable``
-    DROPS an external table and recreates it MANAGED at the warehouse
-    (verified on pyspark 4.1.2), orphaning the on-disk store dir —
-    a path-addressed store would silently stop reflecting committed
-    state."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    info = {r.col_name: r.data_type for r in rows}
-    if info.get("Type", "").strip().upper() != "EXTERNAL":
-        return None
-    loc = info["Location"]
-    return loc[len("file:"):] if loc.startswith("file:") else loc
+def _tombstoned(table_prefix: str):
+    """The posting index's tombstone lifecycle (sources/store.py): the
+    sidecar sits beside the postings dir, the docs ledger holds the
+    deletable ids."""
+    from ..sources.store import TombstonedStore
 
-
-def _tombstones_sidecar_path(spark: SparkSession, table_prefix: str) -> str:
-    """Canonical on-disk home of the tombstone list: a sibling of the
-    postings data dir (``<postings>__tombstones``), so it shares the
-    store's lifecycle whether the store is external or
-    warehouse-managed."""
-    from ..sources.io import table_bucket_spec
-
-    _, _, ppath = table_bucket_spec(spark, f"{table_prefix}_postings")
-    return ppath.rstrip("/") + "__tombstones"
-
-
-def _heal_tombstones(spark: SparkSession, table_prefix: str) -> bool:
-    """Restart self-heal for the tombstone table — the same story
-    ``register_bucketed_table`` gives postings/docs: the catalog entry
-    is per-session, the ``<postings>__tombstones`` data dir is not.
-    Without this, a fresh session would serve tombstoned (taken-down)
-    docs again and the sink's stats recompute would resurrect their
-    counts. Re-registers an EXTERNAL table over surviving sidecar data
-    (schema declared, not inferred — a post-vacuum empty dir has no
-    footer to read); no-ops when the table is live or the store was
-    never deleted into. Local-filesystem stores only (the engine's
-    test/laptop path — the sidecar probe is ``os.path``): a non-local
-    store (hdfs://, s3a://) pairs with a live metastore, where catalog
-    entries survive restarts and the heal is never needed. Returns
-    True if the table exists after the call."""
-    import os
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_tbl):
-        return True
-    if not spark.catalog.tableExists(f"{table_prefix}_postings"):
-        return False
-    tpath = _tombstones_sidecar_path(spark, table_prefix)
-    if not os.path.isdir(tpath):
-        return False
-    spark.sql(
-        f"CREATE TABLE {tomb_tbl} (`doc_id` bigint) USING parquet "
-        f"LOCATION '{tpath}'"
+    return TombstonedStore(
+        f"{table_prefix}_tombstones",
+        anchor=f"{table_prefix}_postings",
+        ledger=f"{table_prefix}_docs",
+        keys=("doc_id",),
+        key_type="bigint",
     )
-    return True
 
 
 def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
@@ -417,7 +375,6 @@ def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
     append/delete would read dropped files (or miss new ones) without
     the refresh."""
     docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
     # existence-guarded (like docs below): an unconditional refresh of a
     # nonexistent table raises a catalog error far less informative than
     # a store-not-found message
@@ -431,20 +388,13 @@ def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
             spark.catalog.refreshTable(f"{table_prefix}_{sub}")
     if spark.catalog.tableExists(docs_tbl):
         spark.catalog.refreshTable(docs_tbl)
-    tombs = None
-    if _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        tombs = spark.table(tomb_tbl)
-        if tombs.isEmpty():
-            # post-vacuum (or never-deleted-into) store: checked ONCE at
-            # load so every query plan stays anti-join-free, exactly the
-            # pre-delete plan shape (plan-asserted in tests)
-            tombs = None
     return PostingIndex(
         spark.table(f"{table_prefix}_postings"),
         spark.table(f"{table_prefix}_stats"),
         spark.table(docs_tbl) if spark.catalog.tableExists(docs_tbl) else None,
-        tombs,
+        # None after a vacuum: query plans stay anti-join-free
+        # (plan-asserted in tests)
+        _tombstoned(table_prefix).live(spark),
     )
 
 
@@ -498,26 +448,13 @@ def append_to_posting_index(index_delta: PostingIndex, table_prefix: str) -> Non
     # replay guard: committed docs leave the delta entirely
     committed_ids = spark.table(docs_tbl).select("doc_id")
     fresh_docs = index_delta.docs.join(committed_ids, "doc_id", "left_anti")
-    # the ledger delta is consumed by the stale-row guard's broadcast id
-    # list, the postings anti-join and the docs append — pin it once
+    # the ledger delta is consumed by the scrub, the postings anti-join
+    # and the docs append — pin it once
     fresh_docs = fresh_docs.localCheckpoint()
     batch_ids = F.broadcast(fresh_docs.select("doc_id"))
-    # vacuum-crash-window scrub (the vector store's protocol,
-    # operators/vector_store.append_to_vector_index): an ADMITTED id —
-    # absent from the ledger — that still has a tombstone row can only
-    # be a vacuum that died between its physical fold and its tombstone
-    # clear (live tombstones are in the ledger and never admitted).
-    # Scrub those rows before the data appends, or the re-ingested doc
-    # would be invisibly suppressed at query time, excluded from the
-    # derived stats, and physically folded by the next vacuum.
-    if _heal_tombstones(spark, table_prefix):
-        tomb_tbl = f"{table_prefix}_tombstones"
-        spark.catalog.refreshTable(tomb_tbl)
-        tombs = spark.table(tomb_tbl)
-        if not tombs.join(batch_ids, "doc_id", "left_semi").isEmpty():
-            _rewrite_tombstones(
-                spark, table_prefix, tombs.join(batch_ids, "doc_id", "left_anti")
-            )
+    # before the data appends: a stale tombstone row would shadow the
+    # re-ingested doc (sources/store.py, vacuum crash window)
+    _tombstoned(table_prefix).scrub(spark, fresh_docs)
     to_append = index_delta.postings.join(batch_ids, "doc_id", "left_semi")
     stale = spark.table(postings_tbl).join(batch_ids, "doc_id", "left_semi")
     to_append = to_append.join(stale, ["word", "doc_id"], "left_anti")
@@ -531,26 +468,27 @@ def _live_docs(spark: SparkSession, table_prefix: str) -> DataFrame:
     set every derived quantity (stats, rebuild-equivalence) is defined
     over."""
     docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
     spark.catalog.refreshTable(docs_tbl)
     live = spark.table(docs_tbl)
-    if _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        live = live.join(
-            F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti"
-        )
+    tombs = _tombstoned(table_prefix).frame(spark)
+    if tombs is not None:
+        live = live.join(F.broadcast(tombs), "doc_id", "left_anti")
     return live
 
 
-def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
+def _refresh_stats(
+    spark: SparkSession, table_prefix: str, path: str | None = None
+) -> None:
     """Overwrite ``{prefix}_stats`` with (n_docs, total_dl) DERIVED
     from the live ledger (committed docs minus tombstones) — exact
     BIGINTs, idempotent under any replay, never a read-modify-write
-    fold. An EXTERNAL stats table keeps its location through the
-    overwrite (``_table_path_if_external``): dropping it to a managed
-    warehouse table would leave the store's on-disk ``stats/`` dir
-    stale — a path-addressed reader would see pre-delete counts."""
+    fold — driver-side (``io.write_small_table``). The table is written
+    at ``path``, defaulting to its current EXTERNAL location: dropping
+    it to a managed warehouse table would leave the store's on-disk
+    ``stats/`` dir stale — a path-addressed reader would see pre-delete
+    counts."""
     from ..sources.io import write_small_table
+    from ..sources.store import _table_path_if_external
 
     stats_tbl = f"{table_prefix}_stats"
     row = (
@@ -561,38 +499,15 @@ def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
         )
         .collect()[0]
     )
-    spath = (
-        _table_path_if_external(spark, stats_tbl)
-        if spark.catalog.tableExists(stats_tbl)
-        else None
-    )
+    if path is None and spark.catalog.tableExists(stats_tbl):
+        path = _table_path_if_external(spark, stats_tbl)
     write_small_table(
         spark,
         [(row["n_docs"], row["total_dl"] or 0)],
         "n_docs bigint, total_dl bigint",
         stats_tbl,
-        spath,
+        path,
     )
-
-
-def _rewrite_tombstones(
-    spark: SparkSession, table_prefix: str, live: DataFrame
-) -> None:
-    """Overwrite the tombstone table with ``live``'s rows, preserving
-    its external location (an EXTERNAL tombstone table — the normal
-    case, created at ``<postings>__tombstones`` — must keep its
-    location through the overwrite: a bare saveAsTable would drop it
-    and recreate MANAGED at the warehouse, leaving the old ids orphaned
-    on disk for the next session's self-heal to resurrect as live
-    tombstones). ``live`` may read from the table itself, so it is
-    materialized first. Bounded: tombstone tables hold takedown id
-    lists."""
-    tomb_tbl = f"{table_prefix}_tombstones"
-    writer = live.localCheckpoint().write.mode("overwrite").format("parquet")
-    tpath = _table_path_if_external(spark, tomb_tbl)
-    if tpath is not None:
-        writer = writer.option("path", tpath)
-    writer.saveAsTable(tomb_tbl)
 
 
 def remove_from_posting_index(
@@ -600,62 +515,22 @@ def remove_from_posting_index(
 ) -> int:
     """Logically DELETE documents from a persisted index (takedown /
     recrawl-replacement maintenance): the ids land in a
-    ``{prefix}_tombstones`` table, stats re-derive over the live ledger
-    (committed minus tombstoned — so n_docs/avgdl immediately reflect
-    the deletion), and :func:`bm25_topk_indexed` excludes tombstoned
-    docs via a broadcast anti-join on the candidate-sized frame. The
-    result is BIT-IDENTICAL to an index rebuilt without those docs
-    (pinned in tests): tf rows drop before df is counted, and the
-    stats are the rebuild's exact integers.
+    ``{prefix}_tombstones`` table (sources/store.py), stats re-derive
+    over the live ledger (committed minus tombstoned — so n_docs/avgdl
+    immediately reflect the deletion), and :func:`bm25_topk_indexed`
+    excludes tombstoned docs via a broadcast anti-join on the
+    candidate-sized frame. The result is BIT-IDENTICAL to an index
+    rebuilt without those docs (pinned in tests): tf rows drop before
+    df is counted, and the stats are the rebuild's exact integers.
 
-    Replay-safe and idempotent: ids already tombstoned are dropped by
-    an anti-join before the append (re-running a crashed delete adds
-    nothing), and ids absent from the docs ledger are ignored (deleting
-    a never-indexed doc is a no-op, not an error). Returns the number
-    of NEWLY tombstoned ids.
-
-    Scale shape: tombstones stay query-time-broadcastable because
-    :func:`vacuum_posting_index` periodically folds them into a
-    physical rewrite and clears the table — the LSM delete pattern.
-    A tombstoned id stays deleted until a vacuum; re-ingesting it
-    requires vacuuming first (the append guard treats ledger ids as
-    committed).
+    Replay-safe and idempotent: already-tombstoned ids and ids absent
+    from the docs ledger are ignored. Returns the number of NEWLY
+    tombstoned ids. A tombstoned id stays deleted until a vacuum;
+    re-ingesting it requires vacuuming first (the append guard treats
+    ledger ids as committed).
 
     ``doc_ids``: a one-column DataFrame or any iterable of ids."""
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id bigint"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not spark.catalog.tableExists(docs_tbl):
-        raise ValueError(
-            f"{docs_tbl} not found: deletes need the docs ledger — rebuild "
-            "the store with persist_posting_index first"
-        )
-    spark.catalog.refreshTable(docs_tbl)
-    # only ids the ledger knows can die; already-dead ids are replays
-    fresh = ids.distinct().join(
-        spark.table(docs_tbl).select("doc_id"), "doc_id", "left_semi"
-    )
-    has_tombs = _heal_tombstones(spark, table_prefix)
-    if has_tombs:
-        spark.catalog.refreshTable(tomb_tbl)
-        fresh = fresh.join(F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti")
-    # takedown lists are broadcast-sized by the store contract, so the
-    # newly dead ids are collected (ONE bounded job) and appended
-    # driver-side — replacing localCheckpoint + count + a Spark write
-    # job; a contract-violating corpus-sized frame degrades to the
-    # distributed append instead of OOMing the driver
-    # (io.append_ids_table); the tombstone home is the
-    # `<postings>__tombstones` sidecar either way
-    from ..sources.io import append_ids_table
-
-    n = append_ids_table(
-        spark, fresh, "doc_id bigint", tomb_tbl,
-        _tombstones_sidecar_path(spark, table_prefix),
-    )
+    n = _tombstoned(table_prefix).delete(spark, doc_ids)
     if n:
         _refresh_stats(spark, table_prefix)
     return n
@@ -663,60 +538,24 @@ def remove_from_posting_index(
 
 def vacuum_posting_index(spark: SparkSession, table_prefix: str) -> dict:
     """Physically drop tombstoned docs' rows from the postings table
-    and the docs ledger — a spec-preserving staged rewrite + directory
-    swap per table (``compact_bucketed_table``'s crash-recoverable
-    protocol, riding its ``transform`` seam) — then clear the
-    tombstones table. Query results are identical before and after
-    (the anti-join was already excluding those rows — pinned in
-    tests); vacuum reclaims space, restores scan cost to live-data
-    size, compacts as a side effect, and resets the broadcast
-    tombstone list that query-time carries.
-
-    Crash ordering: each table swap is individually crash-recovered
-    (``recover_compact_swap``); a crash after the rewrites but before
-    the tombstone clear leaves tombstones whose rows are already gone —
-    the query-time anti-join and the stats derivation then subtract
-    nothing, and re-running the vacuum completes the clear. The
-    residual hazard inside that window — a RE-INGEST of a folded
-    doc_id admitted by the ledger guard while its stale tombstone row
-    still shadows it — is closed structurally by
-    :func:`append_to_posting_index`, which scrubs stale tombstone rows
-    for the ids it admits (the vector store's protocol, pinned in
-    tests). Returns per-table rewrite reports plus the number of
-    tombstones folded."""
-    from ..sources.io import compact_bucketed_tables
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not _heal_tombstones(spark, table_prefix):
-        return {"tombstones_folded": 0}
-    spark.catalog.refreshTable(tomb_tbl)
-    # no checkpoint: `dead` is only consumed by the folds below, all of
-    # which commit BEFORE the clear rewrites the table it reads
-    dead = spark.table(tomb_tbl)
-    n_dead = dead.count()
-    report: dict = {"tombstones_folded": n_dead}
-    if n_dead:
-        drop_dead = lambda df: df.join(F.broadcast(dead), "doc_id", "left_anti")  # noqa: E731
-        # the two table rewrites are independent — overlapped (§2.6)
-        report.update(
-            compact_bucketed_tables(
-                spark,
-                {
-                    f"{table_prefix}_postings": drop_dead,
-                    f"{table_prefix}_docs": drop_dead,
-                },
-            )
-        )
-        report["postings"] = report.pop(f"{table_prefix}_postings")
-        report["docs"] = report.pop(f"{table_prefix}_docs")
-    # the clear writes a 0-row artifact — driver-side, no Spark job
-    from ..sources.io import write_small_table
-
-    write_small_table(
-        spark, [], "doc_id bigint", tomb_tbl,
-        _table_path_if_external(spark, tomb_tbl),
+    and the docs ledger, clear the tombstones table
+    (``TombstonedStore.vacuum``), then re-derive the stats. Query
+    results are identical before and after (the anti-join was already
+    excluding those rows — pinned in tests); vacuum reclaims space,
+    restores scan cost to live-data size, compacts as a side effect,
+    and resets the broadcast tombstone list that query-time carries.
+    Returns per-table rewrite reports (``postings``, ``docs``) plus the
+    number of tombstones folded."""
+    store = _tombstoned(table_prefix)
+    report = store.vacuum(
+        spark,
+        {
+            "postings": (f"{table_prefix}_postings", "doc_id"),
+            "docs": (f"{table_prefix}_docs", "doc_id"),
+        },
     )
-    _refresh_stats(spark, table_prefix)
+    if store.heal(spark):  # a store that was deleted into
+        _refresh_stats(spark, table_prefix)
     return report
 
 

@@ -4,21 +4,13 @@ from .joins import (
     interval_join_streams_outer,
 )
 from .sinks import (
-    dedup_store_delete_batch,
-    dedup_store_delete_sink,
     incremental_dedup_sink,
     neardup_dedup_sink,
-    neardup_delete_batch,
-    neardup_delete_sink,
     neardup_upsert_batch,
-    search_index_delete_batch,
-    search_index_delete_sink,
     search_index_sink,
     search_index_upsert_batch,
     takedown_fanout_batch,
     takedown_fanout_sink,
-    vector_index_delete_batch,
-    vector_index_delete_sink,
     vector_index_sink,
     vector_index_upsert_batch,
 )
@@ -35,18 +27,12 @@ from .windows import (
 
 __all__ = [
     "click_purchase_attribution",
-    "dedup_store_delete_batch",
-    "dedup_store_delete_sink",
     "events_stream_from_dir",
     "gap_filled_stream",
     "incremental_dedup_sink",
     "interval_join_streams",
     "neardup_dedup_sink",
-    "neardup_delete_batch",
-    "neardup_delete_sink",
     "neardup_upsert_batch",
-    "search_index_delete_batch",
-    "search_index_delete_sink",
     "search_index_sink",
     "search_index_upsert_batch",
     "interval_join_streams_outer",
@@ -59,8 +45,6 @@ __all__ = [
     "takedown_fanout_sink",
     "tumbling_stream",
     "user_running_stats",
-    "vector_index_delete_batch",
-    "vector_index_delete_sink",
     "vector_index_sink",
     "vector_index_upsert_batch",
 ]

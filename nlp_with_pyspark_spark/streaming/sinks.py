@@ -74,26 +74,15 @@ def incremental_dedup_sink(
             if spark.catalog.tableExists(table):
                 spark.catalog.refreshTable(table)
                 fresh = fresh.join(spark.table(table).select(*keys), keys, "left_anti")
-                from ..operators.dedup import (
-                    _rewrite_exact_store_tombstones,
-                    exact_dedup_store_tombstones,
-                )
+                from ..operators.dedup import _exact_tombstoned
 
-                tombs = exact_dedup_store_tombstones(spark, table, key_cols)
-                if tombs is not None:
-                    # vacuum-crash-window scrub (the vector store's
-                    # protocol): an ADMITTED key — absent from the store
-                    # table — that still has a tombstone row can only be
-                    # a vacuum that died between its physical fold and
-                    # its tombstone clear. Scrub it, or the re-ingested
-                    # row would be invisibly excluded by every consumer
-                    # that anti-joins the tombstone list.
+                store = _exact_tombstoned(table, key_cols)
+                if store.live(spark) is not None:
+                    # admitted keys must not stay shadowed by a crashed
+                    # vacuum's stale tombstone rows (sources/store.py);
+                    # pinned: the scrub and the append read one batch
                     fresh = fresh.localCheckpoint()
-                    b_keys = F.broadcast(fresh.select(*keys))
-                    if not tombs.join(b_keys, keys, "left_semi").isEmpty():
-                        _rewrite_exact_store_tombstones(
-                            spark, table, tombs.join(b_keys, keys, "left_anti")
-                        )
+                    store.scrub(spark, fresh)
                 append_to_bucketed_table(fresh, table)
             else:
                 write_bucketed(fresh, table, keys[0], n_buckets, path=path)
@@ -474,27 +463,16 @@ def neardup_upsert_batch(
         # batch so a never-deleted-into store adds no join at all. The
         # docs-guard anti-join above still sees tombstoned ids in the
         # ledger — re-ingesting one requires a vacuum first, the
-        # posting-index rule. Before the views load: an ADMITTED id
-        # (absent from the ledger) that still has a tombstone row can
-        # only be a vacuum that died between its physical fold and its
-        # tombstone clear — scrub those stale rows now (the vector
-        # store's protocol) or the re-ingested doc would be invisibly
+        # posting-index rule. Before the views load, admitted ids are
+        # scrubbed of a crashed vacuum's stale tombstone rows
+        # (sources/store.py) or the re-ingested doc would be invisibly
         # excluded from every future delta check's index views.
-        from ..operators.dedup import (
-            _rewrite_neardup_tombstones,
-            neardup_store_tombstones,
-        )
+        from ..operators.dedup import _neardup_tombstoned
 
-        tombs = neardup_store_tombstones(spark, table_prefix, id_col)
-        if tombs is not None:
-            b_ids = F.broadcast(fresh_ids)
-            if not tombs.join(b_ids, "doc_id", "left_semi").isEmpty():
-                _rewrite_neardup_tombstones(
-                    spark,
-                    table_prefix,
-                    tombs.join(b_ids, "doc_id", "left_anti"),
-                )
-                tombs = neardup_store_tombstones(spark, table_prefix, id_col)
+        store = _neardup_tombstoned(table_prefix, id_col)
+        tombs = store.live(spark)
+        if tombs is not None and store.scrub(spark, fresh_ids):
+            tombs = store.live(spark)
         if tombs is not None and keys_raw is not None:
             t_ids = F.broadcast(tombs.select("doc_id"))
             keys_raw = keys_raw.join(t_ids, "doc_id", "left_anti")
@@ -782,6 +760,11 @@ def search_index_upsert_batch(
 
     docs_rows = fresh.select("doc_id", F.size("tokens").alias("dl"))
     if bucketed:
+        # before the commit point: admitted ids must not stay shadowed by
+        # a crashed vacuum's stale tombstone rows (sources/store.py)
+        from ..operators.search import _tombstoned
+
+        _tombstoned(table_prefix).scrub(spark, fresh)
         if spark.catalog.tableExists(postings_tbl):
             append_to_bucketed_table(to_append, postings_tbl)
         else:
@@ -797,38 +780,17 @@ def search_index_upsert_batch(
         docs_rows.write.mode("append").parquet(docs_path)  # commit point
 
     # stats: DERIVED from the committed docs table (exact BIGINTs), so
-    # the overwrite is idempotent under any replay; docs tombstoned by
-    # operators/search.remove_from_posting_index stay subtracted (the
-    # recompute must not resurrect their counts). _heal_tombstones
-    # gives the tombstone list the SAME restart story this function
-    # gives postings/docs above — a fresh session's first batch must
-    # not resurrect takedowns committed by the previous session.
-    from ..operators.search import _heal_tombstones
-
-    committed = _load(docs_path, docs_tbl)
-    tomb_tbl = f"{table_prefix}_tombstones" if bucketed else None
-    if tomb_tbl and _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        committed = committed.join(
-            F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti"
-        )
-    stats = committed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_dl"),
-    )
+    # the overwrite is idempotent under any replay; tombstoned docs stay
+    # subtracted, healed after a restart (operators/search._refresh_stats)
     if bucketed:
-        # collect-then-recreate: saveAsTable('overwrite') cannot read
-        # from the table it replaces, and the 1-row collect is bounded
-        row = stats.collect()[0]
-        spark.createDataFrame(
-            [(row["n_docs"], row["total_dl"])], "n_docs bigint, total_dl bigint"
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{store_path}/stats"
-        ).saveAsTable(f"{table_prefix}_stats")
+        from ..operators.search import _refresh_stats
+
+        _refresh_stats(spark, table_prefix, f"{store_path}/stats")
     else:
-        stats.localCheckpoint().write.mode("overwrite").parquet(
-            f"{store_path}/stats"
-        )
+        _load(docs_path, None).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").cast("long").alias("total_dl"),
+        ).localCheckpoint().write.mode("overwrite").parquet(f"{store_path}/stats")
 
     if compact_threshold_files is not None:
         if bucketed:
@@ -870,193 +832,6 @@ def search_index_sink(
     )
     q.awaitTermination()
     return q
-
-
-def neardup_delete_batch(
-    batch_df: DataFrame,
-    table_prefix: str,
-    hash_family: str = "minhash",
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-) -> int:
-    """One streaming takedown step against a dedup-on-ingest survivor
-    store: tombstone this micro-batch's ids
-    (operators/dedup.remove_from_neardup_store — the delete half of
-    :func:`neardup_upsert_batch`'s append), so a taken-down document
-    stops suppressing near-duplicates of its content as soon as the
-    batch commits. Idempotence comes from the delete itself
-    (already-dead and never-stored ids are dropped by anti-joins before
-    the tombstone append), so a foreachBatch replay after a crash adds
-    nothing — no sink-side ledger needed.
-
-    ``vacuum_threshold_tombstones``: the LSM maintenance cadence —
-    after the delete commits, if the live tombstone list has grown past
-    the threshold, :func:`~..operators.dedup.vacuum_neardup_store`
-    folds it into a physical rewrite of all three store tables, keeping
-    the per-batch broadcast anti-join list small no matter how long the
-    takedown stream runs. A crash between the delete and the vacuum is
-    safe: the vacuum is itself crash-recoverable and the next batch
-    re-triggers it.
-
-    Returns the number of newly tombstoned ids."""
-    from ..operators.dedup import (
-        neardup_store_tombstones,
-        remove_from_neardup_store,
-        vacuum_neardup_store,
-    )
-
-    spark = batch_df.sparkSession
-    n_new = remove_from_neardup_store(
-        spark, batch_df.select(id_col), table_prefix, id_col=id_col
-    )
-    if vacuum_threshold_tombstones is not None:
-        tombs = neardup_store_tombstones(spark, table_prefix, id_col)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_neardup_store(spark, table_prefix, hash_family, id_col=id_col)
-    return n_new
-
-
-def neardup_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    hash_family: str = "minhash",
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted survivor store: each
-    micro-batch of doc ids is tombstoned via
-    :func:`neardup_delete_batch` — the delete twin of
-    :func:`neardup_dedup_sink`, completing the right-to-be-forgotten
-    story for all three dedup families exactly as
-    :func:`search_index_delete_sink` does for the posting index
-    (takedowns arrive as streams exactly like ingest does). Replaying a
-    batch from the checkpoint is a no-op, and the optional vacuum
-    threshold keeps the store physically bounded under an unbounded
-    delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_delete_batch(
-            batch_df,
-            table_prefix,
-            hash_family=hash_family,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def dedup_store_delete_batch(
-    batch_df: DataFrame,
-    table: str,
-    key_cols: tuple[str, ...] = ("event_id",),
-    vacuum_threshold_tombstones: int | None = None,
-) -> int:
-    """One streaming takedown step against an exact-dedup store
-    (operators/dedup.remove_from_exact_dedup_store — the delete half of
-    :func:`incremental_dedup_sink`'s append): idempotent under replay,
-    with the same threshold-triggered vacuum cadence as the other
-    delete sinks. Returns the number of newly tombstoned keys."""
-    from ..operators.dedup import (
-        exact_dedup_store_tombstones,
-        remove_from_exact_dedup_store,
-        vacuum_exact_dedup_store,
-    )
-
-    spark = batch_df.sparkSession
-    n_new = remove_from_exact_dedup_store(
-        spark, batch_df.select(*key_cols), table, key_cols=key_cols
-    )
-    if vacuum_threshold_tombstones is not None:
-        tombs = exact_dedup_store_tombstones(spark, table, key_cols)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_exact_dedup_store(spark, table, key_cols=key_cols)
-    return n_new
-
-
-def dedup_store_delete_sink(
-    stream_keys: DataFrame,
-    table: str,
-    checkpoint: str,
-    key_cols: tuple[str, ...] = ("event_id",),
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted exact-dedup store — the
-    delete twin of :func:`incremental_dedup_sink`, completing the
-    right-to-be-forgotten story for the fourth and last persisted
-    store family (posting index, three near-dup families, exact
-    dedup). Replays are no-ops; the optional vacuum threshold keeps
-    the store physically bounded under an unbounded delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_store_delete_batch(
-            batch_df,
-            table,
-            key_cols=key_cols,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    q = (
-        stream_keys.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def search_index_delete_batch(
-    batch_df: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-) -> int:
-    """One streaming takedown step: tombstone this micro-batch's ids in
-    the persisted posting index (operators/search.remove_from_posting_
-    index — the delete half of :func:`search_index_upsert_batch`'s
-    append). Idempotence comes from the delete itself: already-dead and
-    never-indexed ids are dropped by anti-joins before the tombstone
-    append, so a foreachBatch replay after a crash adds nothing and the
-    stats re-derivation is a no-op — no sink-side ledger needed.
-
-    ``vacuum_threshold_tombstones``: when set, the LSM maintenance
-    cadence — after the delete commits, if the live tombstone list has
-    grown past the threshold, :func:`~..operators.search.vacuum_
-    posting_index` folds it into a physical rewrite, keeping the
-    query-time anti-join list broadcast-small no matter how long the
-    takedown stream runs (the compact_threshold_files pattern of the
-    append sinks, applied to deletes). A crash between the delete and
-    the vacuum is safe: the vacuum is itself crash-recoverable and the
-    next batch re-triggers it.
-
-    Returns the number of newly tombstoned ids."""
-    from ..operators.search import (
-        _heal_tombstones,
-        remove_from_posting_index,
-        vacuum_posting_index,
-    )
-
-    spark = batch_df.sparkSession
-    n_new = remove_from_posting_index(
-        spark, batch_df.select(id_col), table_prefix
-    )
-    if vacuum_threshold_tombstones is not None and _heal_tombstones(
-        spark, table_prefix
-    ):
-        tomb_tbl = f"{table_prefix}_tombstones"
-        spark.catalog.refreshTable(tomb_tbl)
-        if spark.table(tomb_tbl).count() >= vacuum_threshold_tombstones:
-            vacuum_posting_index(spark, table_prefix)
-    return n_new
 
 
 def vector_index_upsert_batch(
@@ -1157,60 +932,53 @@ def vector_index_sink(
     return q
 
 
-def vector_index_delete_batch(
-    batch_df: DataFrame,
-    table_prefix: str,
-    id_col: str = "vec_id",
-    vacuum_threshold_tombstones: int | None = None,
-) -> int:
-    """One streaming takedown step against the persisted vector index
-    (operators/vector_store.remove_from_vector_index — the delete half
-    of :func:`vector_index_upsert_batch`): idempotent under replay,
-    with the same threshold-triggered vacuum cadence as the other
-    delete sinks. Returns the number of newly tombstoned ids."""
-    from ..operators.vector_store import (
-        remove_from_vector_index,
-        vacuum_vector_index,
-        vector_index_tombstones,
-    )
+def _takedown_target(t: dict) -> tuple:
+    """One fan-out target dict → (label, the batch columns it deletes
+    by, its ``TombstonedStore``, its family's delete, its family's
+    vacuum). Raises on an unknown kind or hash family."""
+    from functools import partial
 
-    spark = batch_df.sparkSession
-    n_new = remove_from_vector_index(spark, batch_df.select(id_col), table_prefix)
-    if vacuum_threshold_tombstones is not None:
-        tombs = vector_index_tombstones(spark, table_prefix)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_vector_index(spark, table_prefix)
-    return n_new
+    from ..operators import dedup, search, vector_store
 
-
-def vector_index_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against the persisted vector index — ANN
-    stops retrieving a vector as soon as its takedown batch commits
-    (embeddings are user-derived data; right-to-be-forgotten must purge
-    the vector store as surely as the text indexes)."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        vector_index_delete_batch(
-            batch_df,
-            table_prefix,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
+    kind, id_col = t["kind"], t.get("id_col", "doc_id")
+    if kind == "posting":
+        p = t["table_prefix"]
+        return (
+            p, [id_col], search._tombstoned(p),
+            partial(search.remove_from_posting_index, table_prefix=p),
+            partial(search.vacuum_posting_index, table_prefix=p),
         )
-
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    if kind == "neardup":
+        p, fam = t["table_prefix"], t.get("hash_family", "minhash")
+        if fam not in dedup.NEARDUP_STORE_TABLES:
+            raise ValueError(
+                f"unknown hash_family {fam!r} (minhash | simhash | semantic)"
+            )
+        return (
+            p, [id_col], dedup._neardup_tombstoned(p, id_col),
+            partial(dedup.remove_from_neardup_store, table_prefix=p, id_col=id_col),
+            partial(
+                dedup.vacuum_neardup_store,
+                table_prefix=p, hash_family=fam, id_col=id_col,
+            ),
+        )
+    if kind == "exact":
+        tbl, key_cols = t["table"], tuple(t.get("key_cols", ("event_id",)))
+        return (
+            tbl, list(key_cols), dedup._exact_tombstoned(tbl, key_cols),
+            partial(dedup.remove_from_exact_dedup_store, table=tbl, key_cols=key_cols),
+            partial(dedup.vacuum_exact_dedup_store, table=tbl, key_cols=key_cols),
+        )
+    if kind == "vector":
+        p = t["table_prefix"]
+        return (
+            p, [id_col], vector_store._tombstoned(p),
+            partial(vector_store.remove_from_vector_index, table_prefix=p),
+            partial(vector_store.vacuum_vector_index, table_prefix=p),
+        )
+    raise ValueError(
+        f"unknown takedown target kind {kind!r} (posting | neardup | exact | vector)"
     )
-    q.awaitTermination()
-    return q
 
 
 def takedown_fanout_batch(batch_df: DataFrame, targets: list[dict]) -> dict:
@@ -1219,61 +987,42 @@ def takedown_fanout_batch(batch_df: DataFrame, targets: list[dict]) -> dict:
     must leave no index serving (or suppressing near-duplicates of)
     the deleted documents. ``targets`` is a list of store specs:
 
-      * ``{"kind": "posting", "table_prefix": ...,
-          "vacuum_threshold_tombstones": ...}``
+      * ``{"kind": "posting", "table_prefix": ..., "id_col": ...}``
       * ``{"kind": "neardup", "table_prefix": ..., "hash_family": ...,
-          "id_col": ..., "vacuum_threshold_tombstones": ...}``
-      * ``{"kind": "exact", "table": ..., "key_cols": (...),
-          "vacuum_threshold_tombstones": ...}``
-      * ``{"kind": "vector", "table_prefix": ..., "id_col": ...,
-          "vacuum_threshold_tombstones": ...}`` — the persisted IVF-PQ
-        embedding store (``id_col`` defaults to ``doc_id``: the one
-        takedown stream carries document ids, and the vector store's
-        vec_id shares that id space when embeddings are per-document)
+          "id_col": ...}``
+      * ``{"kind": "exact", "table": ..., "key_cols": (...)}``
+      * ``{"kind": "vector", "table_prefix": ..., "id_col": ...}`` — the
+        persisted IVF-PQ embedding store (``id_col`` defaults to
+        ``doc_id``: the one takedown stream carries document ids, and
+        the vector store's vec_id shares that id space when embeddings
+        are per-document)
 
-    Atomicity across stores is CONVERGENCE, not a transaction: each
-    store's delete is individually idempotent (anti-joins before the
-    tombstone append), so a crash after store i commits and before
-    store i+1 does is healed by the foreachBatch replay — stores that
-    already deleted re-tombstone nothing, the rest catch up. Stores are
-    processed in ``targets`` order. Returns {store_label: n_new}."""
+    Every target also takes ``"vacuum_threshold_tombstones"``: the LSM
+    maintenance cadence — after the delete commits, if the store's
+    tombstone list has reached the threshold, the family's vacuum folds
+    it into a physical rewrite, keeping the broadcast anti-join list
+    small no matter how long the takedown stream runs. A crash between
+    the delete and the vacuum is safe: the vacuum is crash-recoverable
+    and the next batch re-triggers it.
+
+    Every target is resolved before any store is touched, so a bad
+    target fails the batch with no store changed. Atomicity across
+    stores is CONVERGENCE, not a transaction: each store's delete is
+    individually idempotent, so a crash after store i commits and
+    before store i+1 does is healed by the foreachBatch replay — stores
+    that already deleted re-tombstone nothing, the rest catch up.
+    Stores are processed in ``targets`` order. Returns
+    {store_label: n_new}."""
+    resolved = [_takedown_target(t) for t in targets]
+    spark = batch_df.sparkSession
     out = {}
-    for t in targets:
-        kind = t["kind"]
-        if kind == "posting":
-            out[t["table_prefix"]] = search_index_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "neardup":
-            out[t["table_prefix"]] = neardup_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                hash_family=t.get("hash_family", "minhash"),
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "exact":
-            out[t["table"]] = dedup_store_delete_batch(
-                batch_df,
-                t["table"],
-                key_cols=tuple(t.get("key_cols", ("event_id",))),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "vector":
-            out[t["table_prefix"]] = vector_index_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        else:
-            raise ValueError(
-                f"unknown takedown target kind {kind!r} "
-                "(posting | neardup | exact | vector)"
-            )
+    for t, (label, cols, store, remove, vacuum) in zip(targets, resolved):
+        out[label] = remove(spark, batch_df.select(*cols))
+        threshold = t.get("vacuum_threshold_tombstones")
+        if threshold is not None:
+            tombs = store.frame(spark)
+            if tombs is not None and tombs.count() >= threshold:
+                vacuum(spark)
     return out
 
 
@@ -1291,40 +1040,6 @@ def takedown_fanout_sink(
 
     def delete(batch_df: DataFrame, batch_id: int) -> None:
         takedown_fanout_batch(batch_df, targets)
-
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def search_index_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted posting index: each
-    micro-batch of doc ids is tombstoned via
-    :func:`search_index_delete_batch`, so a BM25 query stops serving a
-    document as soon as its takedown batch commits — the delete twin of
-    :func:`search_index_sink` (takedowns arrive as streams exactly like
-    ingest does). Replaying a batch from the checkpoint is a no-op (the
-    tombstone anti-join), and the optional vacuum threshold keeps the
-    store physically bounded under an unbounded delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        search_index_delete_batch(
-            batch_df,
-            table_prefix,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
 
     q = (
         stream_ids.writeStream.foreachBatch(delete)

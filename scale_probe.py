@@ -960,7 +960,7 @@ def fanout_maint_probe(corpus_dir: str, tag: str) -> dict:
     SemDeDup survivor store), versus the same-size batch hitting each
     store alone, at 1x and --factor x corpus. The simhash survivor
     family is deliberately NOT a probe target: its delete path is the
-    SAME neardup_delete_batch code over a different table set (nothing
+    SAME survivor-store delete code over a different table set (nothing
     new to price), while its one-batch BUILD at a replicated 100x
     corpus is the documented worst case of the within-batch verify
     (perturbed replicas are near-dups by construction, so they pile

@@ -701,7 +701,6 @@ def test_posting_index_tombstones_survive_restart(spark, tokenized_docs, tmp_pat
     catalog entries, keep the files, re-register."""
     from pyspark.sql import functions as F  # noqa: F811
     from nlp_with_pyspark_spark.operators.search import (
-        _table_path_if_external,
         bm25_topk,
         bm25_topk_indexed,
         build_posting_index,
@@ -709,6 +708,7 @@ def test_posting_index_tombstones_survive_restart(spark, tokenized_docs, tmp_pat
         persist_posting_index,
         remove_from_posting_index,
     )
+    from nlp_with_pyspark_spark.sources.store import _table_path_if_external
     from nlp_with_pyspark_spark.sources.io import register_bucketed_table
 
     prefix = "t_bm25_restart_tomb"
@@ -764,13 +764,13 @@ def test_vacuum_keeps_external_locations_and_disk_state(
     disk carries the live counts a path-addressed reader expects."""
     from pyspark.sql import functions as F  # noqa: F811
     from nlp_with_pyspark_spark.operators.search import (
-        _table_path_if_external,
         build_posting_index,
         load_posting_index,
         persist_posting_index,
         remove_from_posting_index,
         vacuum_posting_index,
     )
+    from nlp_with_pyspark_spark.sources.store import _table_path_if_external
 
     prefix = "t_bm25_vac_ext"
     path = str(tmp_path / "pidx")

@@ -1784,6 +1784,57 @@ def test_search_index_sink_stats_respect_tombstones(spark, sf_dir, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
+def test_search_index_sink_scrubs_stale_tombstone_after_crashed_vacuum(
+    spark, sf_dir, tmp_path
+):
+    """The ingest sink closes the vacuum crash window (died after the
+    folds, before the tombstone clear) like append_to_posting_index
+    does: docs re-ingested through the sink whose stale tombstone rows
+    survived the crash serve immediately and count in the stats, and
+    the stats table stays EXTERNAL at the store's stats dir."""
+    from nlp_with_pyspark_spark.operators.search import (
+        bm25_topk,
+        bm25_topk_indexed,
+        build_posting_index,
+        load_posting_index,
+        remove_from_posting_index,
+        vacuum_posting_index,
+    )
+    from nlp_with_pyspark_spark.sources.store import _table_path_if_external
+    from nlp_with_pyspark_spark.streaming.sinks import search_index_upsert_batch
+
+    toks = _neardup_toks(spark, sf_dir).localCheckpoint()
+    store = str(tmp_path / "store")
+    prefix = "t_sidx_crashwin"
+    kw = dict(table_prefix=prefix, n_buckets=8)
+    try:
+        search_index_upsert_batch(toks, store, **kw)
+        full = _bm25_rows(bm25_topk(toks, _BM25_TERMS, k=15))
+        dead = toks.where(F.col("doc_id") % 5 == 0).select("doc_id").localCheckpoint()
+        remove_from_posting_index(spark, dead, prefix)
+        vacuum_posting_index(spark, prefix)
+        # simulate the crash: the folds completed, the clear did not
+        dead.write.mode("append").format("parquet").saveAsTable(
+            f"{prefix}_tombstones"
+        )
+        spark.catalog.refreshTable(f"{prefix}_tombstones")
+
+        search_index_upsert_batch(
+            toks.join(F.broadcast(dead), "doc_id", "left_semi"), store, **kw
+        )
+        assert _table_path_if_external(spark, f"{prefix}_stats") == f"{store}/stats"
+        idx = load_posting_index(spark, prefix)
+        assert idx.tombstones is None
+        assert _bm25_rows(bm25_topk_indexed(idx, _BM25_TERMS, k=15)) == full
+        got = idx.stats.collect()[0]
+        ref = build_posting_index(toks).stats.collect()[0]
+        assert (got["n_docs"], got["total_dl"]) == (ref["n_docs"], ref["total_dl"])
+        assert vacuum_posting_index(spark, prefix)["tombstones_folded"] == 0
+    finally:
+        for t in ("postings", "docs", "stats", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
 def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
     """Takedowns as a stream: two micro-batches of doc ids tombstoned
     via the delete sink leave the index answering EXACTLY like (a) a
@@ -1797,10 +1848,11 @@ def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
         load_posting_index,
         persist_posting_index,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import search_index_delete_sink
+    from nlp_with_pyspark_spark.streaming.sinks import takedown_fanout_sink
 
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
     prefix = "t_sidx_delsink"
+    target = [{"kind": "posting", "table_prefix": prefix}]
     persist_posting_index(
         build_posting_index(toks), prefix, n_buckets=8,
         path=str(tmp_path / "pidx"),
@@ -1823,7 +1875,7 @@ def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(src / "b*"))
             )
-            search_index_delete_sink(stream, prefix, ckpt)
+            takedown_fanout_sink(stream, target, ckpt)
 
         run()
         live = toks.where(F.col("doc_id") % 6 != 0)
@@ -1840,10 +1892,10 @@ def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
         # at-least-once replay of a committed batch: the anti-join
         # drops every already-dead id
         from nlp_with_pyspark_spark.streaming.sinks import (
-            search_index_delete_batch,
+            takedown_fanout_batch,
         )
 
-        assert search_index_delete_batch(dead, prefix) == 0
+        assert takedown_fanout_batch(dead, target) == {prefix: 0}
         idx2 = load_posting_index(spark, prefix)
         assert _bm25_rows(bm25_topk_indexed(idx2, _BM25_TERMS, k=15)) == got
     finally:
@@ -1863,7 +1915,7 @@ def test_search_index_delete_sink_vacuum_threshold(spark, sf_dir, tmp_path):
         load_posting_index,
         persist_posting_index,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import search_index_delete_batch
+    from nlp_with_pyspark_spark.streaming.sinks import takedown_fanout_batch
 
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
     prefix = "t_sidx_delvac"
@@ -1875,15 +1927,15 @@ def test_search_index_delete_sink_vacuum_threshold(spark, sf_dir, tmp_path):
         wave_a = toks.where(F.col("doc_id") % 10 == 0).select("doc_id")
         n_a = wave_a.count()
         # threshold above wave A: no vacuum yet
-        search_index_delete_batch(
-            wave_a, prefix, vacuum_threshold_tombstones=n_a + 1
-        )
+        target = [{
+            "kind": "posting", "table_prefix": prefix,
+            "vacuum_threshold_tombstones": n_a + 1,
+        }]
+        takedown_fanout_batch(wave_a, target)
         assert spark.table(f"{prefix}_tombstones").count() == n_a
         # wave B crosses the threshold: vacuum fires, list empties
         wave_b = toks.where(F.col("doc_id") % 10 == 5).select("doc_id")
-        search_index_delete_batch(
-            wave_b, prefix, vacuum_threshold_tombstones=n_a + 1
-        )
+        takedown_fanout_batch(wave_b, target)
         assert spark.table(f"{prefix}_tombstones").count() == 0
         live = toks.where(~F.col("doc_id").isin(
             [r.doc_id for r in wave_a.union(wave_b).collect()]
@@ -2222,7 +2274,7 @@ def test_neardup_takedown_unsuppresses_future_neardups(
 @pytest.mark.parametrize("family", ["minhash", "simhash", "semantic"])
 def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family):
     """Streaming takedowns ≡ batch takedowns, per family: ids arriving
-    as a file stream through ``neardup_delete_sink`` leave the store in
+    as a file stream through ``takedown_fanout_sink`` leave the store in
     exactly the filtered-snapshot state the batch delete + vacuum
     produces (the vacuum threshold fires on the last micro-batch), and
     replaying the whole stream against a fresh checkpoint is a no-op."""
@@ -2231,8 +2283,8 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
         neardup_store_tombstones,
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
-        neardup_delete_sink,
         neardup_upsert_batch,
+        takedown_fanout_sink,
     )
 
     kw, corpus, id_col = _takedown_setup(spark, sf_dir, family)
@@ -2264,13 +2316,14 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "b*"))
         )
-        neardup_delete_sink(
+        takedown_fanout_sink(
             stream,
-            prefix,
+            [{
+                "kind": "neardup", "table_prefix": prefix,
+                "hash_family": family, "id_col": id_col,
+                "vacuum_threshold_tombstones": len(dead),
+            }],
             str(tmp_path / "ckpt1"),
-            hash_family=family,
-            id_col=id_col,
-            vacuum_threshold_tombstones=len(dead),
         )
         # the vacuum's directory swap ran inside the micro-batch's
         # session clone; this session's cached file listings are stale
@@ -2291,13 +2344,14 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "b*"))
         )
-        neardup_delete_sink(
+        takedown_fanout_sink(
             stream2,
-            prefix,
+            [{
+                "kind": "neardup", "table_prefix": prefix,
+                "hash_family": family, "id_col": id_col,
+                "vacuum_threshold_tombstones": len(dead),
+            }],
             str(tmp_path / "ckpt2"),
-            hash_family=family,
-            id_col=id_col,
-            vacuum_threshold_tombstones=len(dead),
         )
         assert neardup_store_tombstones(spark, prefix, id_col) is None
         for s in suffixes:
@@ -2416,8 +2470,8 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
         exact_dedup_store_tombstones,
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
-        dedup_store_delete_sink,
         incremental_dedup_sink,
+        takedown_fanout_sink,
     )
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
@@ -2449,9 +2503,10 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(ids_src / "b*"))
         )
-        dedup_store_delete_sink(
-            key_stream, tbl, str(tmp_path / "dck1"),
-            vacuum_threshold_tombstones=len(dead),
+        takedown_fanout_sink(
+            key_stream,
+            [{"kind": "exact", "table": tbl, "vacuum_threshold_tombstones": len(dead)}],
+            str(tmp_path / "dck1"),
         )
         spark.catalog.refreshTable(tbl)
         expected = [t for t in snap if t[0] not in set(dead)]
@@ -2463,9 +2518,10 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(ids_src / "b*"))
         )
-        dedup_store_delete_sink(
-            key_stream2, tbl, str(tmp_path / "dck2"),
-            vacuum_threshold_tombstones=len(dead),
+        takedown_fanout_sink(
+            key_stream2,
+            [{"kind": "exact", "table": tbl, "vacuum_threshold_tombstones": len(dead)}],
+            str(tmp_path / "dck2"),
         )
         spark.catalog.refreshTable(tbl)
         assert _exact_store_rows(spark, tbl) == expected
